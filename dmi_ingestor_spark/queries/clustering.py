@@ -736,7 +736,8 @@ def _dbl_oracle() -> str:
     WITH e AS MATERIALIZED (
       SELECT vec_id,
              list_transform(embedding,
-                            x -> CAST(floor(x * {_DBL_SCALE}) AS BIGINT)) AS q
+                            x -> CAST(floor(CAST(x AS DOUBLE) * {_DBL_SCALE})
+                                      AS BIGINT)) AS q
       FROM embeddings
     ),
     keyed AS MATERIALIZED (

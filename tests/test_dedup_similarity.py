@@ -356,3 +356,43 @@ def test_df_cap_candidacy_bbit_contract(spark, hot_only_corpus):
     for pair, j in uncapped.items():
         if j >= 0.5:
             assert pair in got
+
+
+def test_dbscan_lsh_oracle_quantizes_like_the_builder(spark, tmp_path):
+    """float32 0.144 is 0.14399999… in double, so floor(x * 1000) is 143
+    in double but 144 when DuckDB keeps FLOAT * INTEGER in single
+    precision. The pair below is an eps-neighbour only under the single
+    precision grid (|1368 - 144| = 1224, |1368 - 143| = 1225, and
+    1224² ≤ eps² < 1225²); the oracle must quantize in double like the
+    Spark builder."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.oracle_check import compare, normalize
+
+    f32 = np.float32
+    assert f32(0.144) * f32(1000) == 144.0
+    assert np.floor(np.float64(f32(0.144)) * 1000) == 143.0
+
+    def vec(x0: float) -> list[float]:
+        return [x0] + [0.0] * 63
+
+    table = pa.table(
+        {
+            "vec_id": pa.array([0, 1, 2], pa.int64()),
+            "embedding": pa.array(
+                [vec(0.144), vec(1.3685), vec(1.3685)], pa.list_(pa.float32())
+            ),
+            "label": pa.array([0, 0, 0], pa.int32()),
+        }
+    )
+    pq.write_table(table, str(tmp_path / "embeddings.parquet"))
+    spec = REGISTRY["cluster_dbscan_lsh_blocked"]
+    got = spec.builder(spark, str(tmp_path)).toPandas()
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
+        want = con.execute(spec.oracle).fetchdf()
+    assert got["eps_ball_count"].tolist() == [1, 2, 2]
+    assert not compare(spec.name, normalize(got), normalize(want))

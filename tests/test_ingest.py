@@ -4,9 +4,11 @@ keep-last-good and replace-partition semantics asserted explicitly."""
 
 from __future__ import annotations
 
+import calendar
 import json
 import math
 import os
+import time
 
 import numpy as np
 import pytest
@@ -162,6 +164,7 @@ def test_e2e_keep_last_good(spark, out_dir):
 
     res2 = run_ingest(spark, cfg, out_dir, transport_flaky)
     assert res2.failed_parameters == ["p-flaky"]
+    assert res2.errors == {"p-flaky": "RuntimeError: HTTP 500 from upstream"}
 
     import pyspark.sql.functions as F
 
@@ -214,6 +217,7 @@ def test_e2e_decode_failure_keeps_previous_forecast(spark, out_dir):
 
     res2 = run_ingest(spark, cfg, out_dir, transport_corrupt)
     assert res2.failed_parameters == ["p-ok"]
+    assert res2.errors == {"p-ok": "no decodable rows"}
     assert res2.n_partitions_written == 0
 
     import pyspark.sql.functions as F
@@ -221,3 +225,96 @@ def test_e2e_decode_failure_keeps_previous_forecast(spark, out_dir):
     grid = spark.read.parquet(os.path.join(out_dir, "grid"))
     n_after = grid.filter(F.col("parameter") == "p-ok").count()
     assert n_after == res1.n_rows  # old forecast intact, byte for byte
+
+
+def _utc_keys(times: list[int]) -> list[str]:
+    return [time.strftime("%Y%m%dT%H%M%S", time.gmtime(t)) for t in times]
+
+
+def test_decode_runs_once_per_cube(spark, out_dir, tmp_path, monkeypatch):
+    """Validation, write, manifest, stats and the COG export all read one
+    cached decode: 2 cubes make 2 ``decode_cube`` calls, not one per
+    consumer."""
+    from dmi_ingestor_spark.ingest import pipeline
+
+    spool = str(tmp_path / "decodes.spool")
+    open(spool, "wb").close()
+    real_decode = pipeline.decode_cube
+
+    # a closure, so cloudpickle ships it (and the spool path) by value
+    def counting_decode(payload: bytes) -> Cube:
+        with open(spool, "ab") as fh:
+            fh.write(b".")
+        return real_decode(payload)
+
+    monkeypatch.setattr(pipeline, "decode_cube", counting_decode)
+    cfg = IngestConfig(collection="dkss_if", parameters=("p-a", "p-b"))
+    sc = spark.sparkContext
+    sc.setJobGroup("test-decode-once", "one ingest cycle")
+    try:
+        res = run_ingest(spark, cfg, out_dir, _make_transport_ok(), export_tifs=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert os.path.getsize(spool) == 2
+    assert len(sc.statusTracker().getJobIdsForGroup("test-decode-once")) <= 10
+    assert res.failed_parameters == []
+    assert res.n_rows == 2 * 4 * 8 * 8 and len(res.tif_paths) == 8
+
+
+def test_export_retires_stale_cogs_of_refreshed_parameters(spark, out_dir):
+    """A refreshed parameter keeps exactly its new timesteps' COGs; a
+    failed parameter keeps its previous COGs (keep-last-good)."""
+    cfg = IngestConfig(collection="dkss_if", parameters=("p-ok", "p-flaky"))
+    res1 = run_ingest(spark, cfg, out_dir, _make_transport_ok(), export_tifs=True)
+    assert len(res1.tif_paths) == 8
+
+    t0 = 1_767_225_600 + 2 * 3600  # overlaps the first run by 2 steps
+
+    def transport_shifted(url: str) -> bytes:
+        if "p-flaky" in url:
+            raise RuntimeError("HTTP 500 from upstream")
+        parameter = url.split("parameter-name=")[1].split("&")[0]
+        return encode_cube(synthetic_cube(parameter, t0=t0))
+
+    res2 = run_ingest(spark, cfg, out_dir, transport_shifted, export_tifs=True)
+    assert res2.failed_parameters == ["p-flaky"]
+    tif_dir = os.path.join(out_dir, "tif", "dkss_if")
+    new = sorted(f"{t}.tif" for t in _utc_keys([t0 + 3600 * i for i in range(4)]))
+    old = sorted(f"{t}.tif" for t in _utc_keys([t0 - 7200 + 3600 * i for i in range(4)]))
+    assert sorted(os.listdir(os.path.join(tif_dir, "p-ok"))) == new
+    assert sorted(os.listdir(os.path.join(tif_dir, "p-flaky"))) == old
+    assert res2.tif_paths == [os.path.join(tif_dir, "p-ok", f) for f in new]
+    with open(res2.manifest_paths[0]) as fh:
+        assert sorted(f"{t}.tif" for t in json.load(fh)) == new
+
+
+def test_time_keys_are_utc_in_any_session_zone(spark, out_dir):
+    """Partition keys, manifest keys and COG names render the instant in
+    UTC (ingestor.py:104) whatever ``spark.sql.session.timeZone`` the
+    caller's session runs in — including an hour that does not exist
+    in the session zone's local time (the 2026-03-08 DST gap)."""
+    from dmi_ingestor_spark.ingest.pipeline import with_time_str
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        cfg = IngestConfig(collection="dkss_if", parameters=("sea-mean-deviation",))
+        res = run_ingest(spark, cfg, out_dir, _make_transport_ok(), export_tifs=True)
+        edge = [calendar.timegm((2026, 3, 8, 2, 30, 0)), -1, 0]
+        keys = with_time_str(
+            spark.createDataFrame([(t,) for t in edge], "time_s long")
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    want = _utc_keys([1_767_225_600 + 3600 * i for i in range(4)])
+    assert want[0] == "20260101T000000"
+    with open(res.manifest_paths[0]) as fh:
+        assert sorted(json.load(fh)) == want
+    leaf_dir = os.path.join(
+        out_dir, "grid", "collection=dkss_if", "parameter=sea-mean-deviation"
+    )
+    assert sorted(os.listdir(leaf_dir)) == [f"time_str={t}" for t in want]
+    assert sorted(os.path.basename(p) for p in res.tif_paths) == [
+        f"{t}.tif" for t in want
+    ]
+    assert {r.time_s: r.time_str for r in keys} == dict(zip(edge, _utc_keys(edge)))
