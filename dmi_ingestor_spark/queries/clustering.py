@@ -223,10 +223,12 @@ def _semdedup_oracle() -> str:
         "quantized cosine runs only WITHIN clusters (pair count bounded "
         "by Σ cluster², never n²); a row is dropped when a smaller-id "
         "in-cluster neighbor has sim ≥ 0.40. At 100 TB the cluster "
-        "count scales with n so in-cluster blocks stay bounded, the "
-        "per-round k-means shuffle carries k rows, and the verify join "
-        "shuffles on cluster_id only. The whole composition — iteration "
-        "included — is hash-checked against a nested-CTE oracle."
+        "count scales with n, the per-round k-means shuffle carries k "
+        "rows, and the verify step shuffles on cluster_id only; a "
+        "cluster of m vectors costs O(m·dim) group input plus an "
+        "O(ROW_TILE·m) cosine gram tile (operators/gram.py). The whole "
+        "composition — iteration included — is hash-checked against a "
+        "nested-CTE oracle."
     ),
     tags=("dedup", "clustering", "embeddings", "iterative"),
 )
@@ -239,34 +241,23 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pts = asg.join(emb, ["vec_id"])
 
-    # Per-cluster Arrow block: one numpy gram matrix per cluster instead
-    # of an in-cluster pair JOIN — the HOF-expression cosine is an
-    # interpreted closure, so Σ cluster² pairs × 64 dims was the r7
-    # sf0.5 sweep's slowest Spark stage (188 s; this path is ~2 s).
-    # Bit-identical to the expression form AND the DuckDB oracle: the
-    # quantized components are integer-valued (|q| ≤ 1000, 64 dims), so
-    # every dot product / norm² is an exact integer ≤ 6.4e7 under ANY
-    # summation order, and the final sqrt·sqrt / divide round once each,
-    # identically. Memory per group is (cluster size)² — bounded because
-    # SemDeDup scales k with n (fixture: ≤(n/10)² ≈ 8 MB at sf0.5).
+    # Per-cluster Arrow block instead of an in-cluster pair JOIN — the
+    # HOF-expression cosine is an interpreted closure, so Σ cluster²
+    # pairs × 64 dims was the r7 sf0.5 sweep's slowest Spark stage
+    # (188 s; this path is ~2 s). A cluster of m vectors costs O(m·dim)
+    # group input plus an O(ROW_TILE·m) gram tile (operators/gram.py).
     import numpy as np
     import pandas as pd
 
-    tau = _SEM_TAU
+    from dmi_ingestor_spark.operators import gram
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf["vec_id"].to_numpy())
         ids = pdf["vec_id"].to_numpy()[order]
         cids = pdf["cluster_id"].to_numpy()[order]
         v = np.stack(pdf["qv"].to_numpy()[order]).astype(np.float64)
-        dots = v @ v.T
-        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
-        den = nrm[:, None] * nrm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(den > 0, dots / den, 0.0)
-        # dropped iff any smaller-id in-cluster neighbor has sim >= tau;
-        # ids are sorted, so "smaller id" = strictly-lower triangle
-        dup = np.tril(cos >= tau, -1).any(axis=1)
+        # dropped iff any smaller-id in-cluster neighbor has sim >= tau
+        dup = gram.any_smaller_at_least(v, _SEM_TAU)
         return pd.DataFrame(
             {"vec_id": ids, "cluster_id": cids, "is_kept": ~dup}
         )
@@ -702,27 +693,12 @@ def cluster_dbscan_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DBL_SCALE = 1000
 _DBL_EPS2 = 1_500_000  # eps^2 on the 1000-scaled integer grid (~1% of pairs)
 _DBL_MINPTS = 3
-_DBL_PLANES = 8
-
-
-def _dbl_planes() -> list[list[int]]:
-    """±1 hyperplanes, md5-derived at plan time (similarity.py recipe)."""
-    import hashlib
-
-    return [
-        [
-            1
-            if int(hashlib.md5(f"p{j}-{i}".encode()).hexdigest()[0], 16) % 2
-            == 0
-            else -1
-            for i in range(64)
-        ]
-        for j in range(_DBL_PLANES)
-    ]
 
 
 def _dbl_oracle() -> str:
-    planes = _dbl_planes()
+    from dmi_ingestor_spark.queries.similarity import _plane_literals
+
+    planes = _plane_literals(64)
     dot_terms = []
     for j, row in enumerate(planes):
         terms = " + ".join(
@@ -778,29 +754,27 @@ def _dbl_oracle() -> str:
         "ladder), and the oracle applies the IDENTICAL bucket "
         "predicate, so the hash pin checks the blocked semantics, "
         "not a pretense of exactness. Scale: bucketing is map-side "
-        "(plan-time literals, no model table), the join is keyed on "
-        "the bucket — O(n x bucket occupancy), never n^2."
+        "(plan-time literals, no model table), one shuffle keyed on "
+        "the bucket, and a bucket of m vectors costs O(m·dim) group "
+        "input plus an O(ROW_TILE·m) squared-distance gram tile "
+        "(operators/gram.py) — O(n x bucket occupancy) work, never n^2."
     ),
     tags=("clustering", "density", "lsh", "embeddings", "scale"),
 )
 def cluster_dbscan_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2, same pattern as sim_ann_lsh_buckets): the
-    # 8-plane signature was ~8×64×2 interpreted HOF lambda steps per
-    # row, and the eps-ball count ran one interpreted HOF squared
-    # distance per CANDIDATE PAIR after a bucket self-join (plus a
-    # cache + left join to restore zero-neighbor rows). Now: one numpy
-    # sign-pack per Arrow batch, then one gram block per bucket that
-    # counts neighbors for EVERY member (zero-neighbor rows included,
-    # so the join disappears). Exactness: q is the Spark-computed
-    # floor(x*1000) long vector; plane dots and the expanded
-    # ‖a‖²+‖b‖²−2a·b distance are exact integers far below 2^53 under
-    # any accumulation order, so the eps2 comparison is bit-identical
-    # to the (a−b)² HOF chain and the oracle.
+    # The 8-plane signature is one numpy sign-pack per Arrow batch
+    # (similarity._signed_buckets), then one tiled gram per bucket
+    # counts eps-neighbours for EVERY member (zero-neighbor rows
+    # included, so no join restores them). q is the Spark-computed
+    # floor(x*1000) long vector, so the expanded squared distance is an
+    # exact integer (operators/gram.py) and the eps2 comparison equals
+    # the oracle's (a−b)² chain.
     import numpy as np
     import pandas as pd
 
-    h_t = np.asarray(_dbl_planes(), dtype=np.float64).T  # dim × planes
-    weights = 2 ** np.arange(len(_dbl_planes()), dtype=np.int64)
+    from dmi_ingestor_spark.operators import gram
+    from dmi_ingestor_spark.queries.similarity import _plane_literals, _signed_buckets
+
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
@@ -808,31 +782,15 @@ def cluster_dbscan_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: F.floor(x.cast("double") * _DBL_SCALE).cast("long"),
         ).alias("q"),
     )
-
-    def _sig(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["q"].to_numpy()).astype(np.float64)
-            bucket = ((v @ h_t >= 0) * weights).sum(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(), "q": pdf["q"], "bucket": bucket}
-            )
-
-    keyed = e.mapInPandas(_sig, "vec_id long, q array<bigint>, bucket long")
+    keyed = _signed_buckets(e, "q", _plane_literals(64))
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
         v = np.stack(pdf["q"].to_numpy()).astype(np.float64)
-        nsq = np.einsum("ij,ij->i", v, v)
-        d2 = nsq[:, None] + nsq[None, :] - 2.0 * (v @ v.T)
-        close = d2 <= _DBL_EPS2
-        np.fill_diagonal(close, False)
         return pd.DataFrame(
             {
-                "vec_id": ids,
+                "vec_id": pdf["vec_id"].to_numpy(),
                 "bucket": pdf["bucket"].iloc[0],
-                "n_neighbors": close.sum(axis=1).astype(np.int64),
+                "n_neighbors": gram.count_within(v, _DBL_EPS2),
             }
         )
 

@@ -674,23 +674,21 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "U5/U6 embedding near-dup: quantized cosine over pairs *within a "
         "label block* — the blocking key bounds the pair count (the same "
-        "role LSH buckets play when no label exists). Join shuffles on "
-        "label; cosine is one numpy gram block per label (Arrow)."
+        "role LSH buckets play when no label exists). Shuffles on "
+        "label; a block of m vectors costs O(m·dim) group input plus an "
+        "O(ROW_TILE·m) cosine gram tile (operators/gram.py)."
     ),
     tags=("dedup", "similarity", "embeddings"),
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Per-label Arrow gram block (r7), same rationale and same
-    # bit-exactness argument as dedup_semantic_cluster: the pair-join
-    # form evaluated the cosine as an interpreted HOF closure over
-    # Sigma block^2 pairs (~5e6 at sf0.5 -> 150s+); one numpy gram
-    # matrix per label block ships each vector once. Quantized integer
-    # components keep every dot/norm an exact integer under any
-    # summation order, so sim is IEEE-identical to the expression form
-    # and the oracle. Block size is bounded by the blocking premise
-    # (labels here, LSH buckets when no label exists).
+    # Per-label Arrow gram block (r7): the pair-join form evaluated the
+    # cosine as an interpreted HOF closure over Σ block² pairs (~5e6 at
+    # sf0.5 -> 150s+); one tiled gram per label block ships each vector
+    # once.
     import numpy as np
     import pandas as pd
+
+    from dmi_ingestor_spark.operators import gram
 
     # label.isNotNull(): the oracle's a.label = b.label join drops NULL
     # labels, but groupBy would keep a NULL-label group and emit pairs
@@ -706,20 +704,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         order = np.argsort(pdf["vec_id"].to_numpy())
         ids = pdf["vec_id"].to_numpy()[order]
         v = np.stack(pdf["qv"].to_numpy()[order]).astype(np.float64)
-        dots = v @ v.T
-        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
-        den = nrm[:, None] * nrm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(den > 0, dots / den, 0.0)
-        iu, ju = np.triu_indices(len(ids), k=1)  # a_id < b_id (sorted)
-        keep = cos[iu, ju] >= 0.40
+        i, j, sim = gram.pairs_at_least(v, 0.40)  # a_id < b_id (sorted)
         return pd.DataFrame(
-            {
-                "label": pdf["label"].iloc[0],
-                "a_id": ids[iu[keep]],
-                "b_id": ids[ju[keep]],
-                "sim": cos[iu[keep], ju[keep]],
-            }
+            {"label": pdf["label"].iloc[0], "a_id": ids[i], "b_id": ids[j], "sim": sim}
         )
 
     return emb.groupBy("label").applyInPandas(

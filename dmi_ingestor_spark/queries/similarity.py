@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.catalog import table
 from dmi_ingestor_spark.functions.vector import cosine, quantize, sql_cosine
+from dmi_ingestor_spark.operators import gram
 from dmi_ingestor_spark.registry import register
 
 N_QUERY = 8  # vec_id < 8 are the query vectors
@@ -49,10 +50,9 @@ TOP_K = 5
         "matmul, emitting only each batch's per-query top-k (≤ 40 rows/"
         "batch); the final window ranks that tiny superset. Replaces the "
         "broadcast-nested-loop × interpreted-HOF-cosine form whose "
-        "window shuffled all 8N scored rows. Exactness: quantized "
-        "integer components keep every dot/norm an exact < 2^53 integer "
-        "under any summation order, so the numpy gram is IEEE-identical "
-        "to the zip_with/aggregate expression and the oracle."
+        "window shuffled all 8N scored rows. The gram is "
+        "operators/gram.py's exact-integer cosine, bit-identical to the "
+        "oracle."
     ),
     tags=("similarity", "embeddings"),
 )
@@ -61,7 +61,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     qids, Q, _ = _query_side(sf_dir, N_QUERY)
-    qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+    qn = gram.norms(Q)
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize(F.col("embedding")).alias("qv")
     )
@@ -72,27 +72,11 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["qv"].to_numpy())
-            dots = Q @ v.T
-            vn = np.sqrt(np.einsum("ij,ij->i", v, v))
-            den = qn[:, None] * vn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den > 0, dots / den, 0.0)
-            out = []
-            for qi in range(len(qids)):
-                mask = ids != qids[qi]
-                nb, c = ids[mask], cos[qi][mask]
-                sel = _topk_within(nb, c, TOP_K)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": nb[sel],
-                            "sim": c[sel],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            cos = gram.cosine(Q, v, qn, gram.norms(v))
+            r, c = gram.topk(cos, ids, TOP_K, mask=gram.not_self(qids, ids))
+            yield pd.DataFrame(
+                {"query_id": qids[r], "neighbor_id": ids[c], "sim": cos[r, c]}
+            )
 
     part = emb.mapInPandas(_score, "query_id long, neighbor_id long, sim double")
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
@@ -139,10 +123,10 @@ def _plane_literals(dim: int) -> list[list[float]]:
 
     h_ij = +1 if the first hex digit of md5("p{j}-{i}") is even else -1
     — deterministic, no stored model, reproducible across runs and
-    engines. Values depend only on (j, i), so evaluating md5 inside the
-    Catalyst expression per row (the round-1 form) repaid 8×dim hash
-    calls per vector for constants; now they are plain literals in the
-    plan.
+    engines. Values depend only on (j, i), so they are computed once:
+    the numpy sign-pack (:func:`_signed_buckets`) and the oracle SQL
+    both take them as constants. Shared by the LSH similarity kernels
+    and ``cluster_dbscan_lsh_blocked``.
     """
     import hashlib
 
@@ -266,82 +250,50 @@ def _popcount64(x):
     global _POP8
     if _POP8 is None:
         _POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
-    b = np.ascontiguousarray(x).view(np.uint8).reshape(len(x), 8)
-    return _POP8[b].sum(axis=1)
+    b = np.ascontiguousarray(x).view(np.uint8).reshape(*x.shape, 8)
+    return _POP8[b].sum(axis=-1)
 
 
-def _topk_within(ids, sims, k):
-    """Indices of the top-``k`` rows by (sim DESC, id ASC) — the partial
-    top-k selection every kernel below applies per Arrow batch. Any
-    globally-ranked row is necessarily in its batch's top-k, so the
-    final (tiny) window sees a superset of the true top-k."""
-    import numpy as np
-
-    order = np.lexsort((ids, -sims))
-    return order[: min(k, len(ids))]
+def _hamming(q0, q1, w0, w1):
+    """(nq, n) Hamming distances between query and batch sign words."""
+    return _popcount64(w0[None, :] ^ q0[:, None]) + _popcount64(
+        w1[None, :] ^ q1[:, None]
+    )
 
 
-def _hyperplane_sign_bits(vec_col: F.Column, dim: int) -> F.Column:
-    """8-bit random-hyperplane signature as a BIGINT bucket key.
+def _signed_buckets(df: DataFrame, col: str, planes: list[list[float]]) -> DataFrame:
+    """``df`` plus a ``bucket`` column: the LSH sign signature of the
+    integer-valued vector ``col`` under the ±1 hyperplane rows
+    ``planes``, computed as ONE numpy matmul per Arrow batch.
 
-    sign bit j = (Σᵢ hᵢⱼ·vᵢ) >= 0, with the hyperplane rows embedded as
-    literal arrays — per row the work is one zip_with multiply + one
-    aggregate sum per plane, all JVM-side, zero hashing.
-    """
-    planes = _plane_literals(dim)
-    out: F.Column | None = None
-    for j, plane in enumerate(planes):
-        lits = F.array(*[F.lit(h) for h in plane])
-        s = F.aggregate(
-            F.zip_with(vec_col, lits, lambda x, h: x * h),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(s >= 0, F.lit(2**j)).otherwise(F.lit(0)).cast("long")
-        out = bit if out is None else out + bit
-    return out
-
-
-def _signed_buckets(emb: DataFrame) -> DataFrame:
-    """(vec_id, qv) → (vec_id, qv, bucket): the LSH signature computed
-    as ONE numpy matmul per Arrow batch (round 10, guide §4.2).
-
-    Value-identical to :func:`_hyperplane_sign_bits`: the quantized
-    components and the ±1 plane entries make every plane dot an exact
-    < 2^53 integer under any accumulation order (FMA included), so the
-    sign test matches the interpreted zip_with/aggregate chain — which
-    evaluated ~8×dim×2 interpreted lambda steps PER ROW — bit for bit.
-    Map-shaped: no shuffle, the bucket key feeds the downstream
-    groupBy/join exchange unchanged.
+    Bit j is set iff ``planes[j] · col >= 0``. Value-identical to the
+    oracles' unrolled sums (:func:`_lsh_bucket_sql`): with integer
+    components and ±1 plane entries every plane dot is an exact
+    integer (see operators/gram.py). Map-shaped: no shuffle, the bucket
+    key feeds the downstream groupBy/join exchange unchanged.
     """
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    h_t = np.asarray(_plane_literals(LSH_DIM), dtype=np.float64).T  # dim×planes
-    weights = 2 ** np.arange(N_PLANES, dtype=np.int64)
+    h_t = np.asarray(planes, dtype=np.float64).T  # dim × planes
+    weights = 2 ** np.arange(len(planes), dtype=np.int64)
 
     def _sig(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            v = np.stack(pdf["qv"].to_numpy())
-            bucket = ((v @ h_t >= 0) * weights).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "qv": pdf["qv"],
-                    "bucket": bucket,
-                }
-            )
+            v = np.stack(pdf[col].to_numpy()).astype(np.float64, copy=False)
+            yield pdf.assign(bucket=((v @ h_t >= 0) * weights).sum(axis=1))
 
-    return emb.mapInPandas(_sig, "vec_id long, qv array<double>, bucket long")
+    schema = StructType(df.schema.fields + [StructField("bucket", LongType())])
+    return df.mapInPandas(_sig, schema)
 
 
 LSH_DIM = 64  # embeddings table dimensionality (same contract as PQ_DIM)
 
 
 def _lsh_bucket_sql(qv: str) -> str:
-    """DuckDB twin of :func:`_hyperplane_sign_bits` over quantized vectors.
+    """DuckDB twin of :func:`_signed_buckets` over quantized vectors.
 
     The same ±1 literal hyperplane rows are unrolled into
     ``list_dot_product`` calls, so both engines compute identical exact
@@ -378,51 +330,35 @@ def _lsh_bucket_sql(qv: str) -> str:
         "sign signature (deterministic md5-derived hyperplanes embedded "
         "as plan-time ±1 literal arrays, evaluated JVM-side); candidates "
         "are pairs sharing a bucket, re-ranked by exact cosine. At "
-        "100 TB this is a bucket-key shuffle (O(n) + O(Σ bucket²)) "
-        "instead of an O(n²) cross join. Quantized round(x*1000) "
-        "vectors keep every dot product an exact <2^53 integer, so the "
-        "whole approximate index — bucket keys included — is "
-        "hash-checked against the unrolled DuckDB oracle (upgraded from "
-        "rows-only in round 2)."
+        "100 TB this is a bucket-key shuffle: O(n) shuffled rows, and "
+        "per bucket of m vectors O(m·dim) group input plus an "
+        "O(ROW_TILE·m) gram tile (operators/gram.py), instead of an "
+        "O(n²) cross join. Quantized round(x*1000) vectors keep every "
+        "dot product an exact integer, so the whole approximate index — "
+        "bucket keys included — is hash-checked against the unrolled "
+        "DuckDB oracle."
     ),
     tags=("similarity", "embeddings", "approx"),
 )
 def sim_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2, VERDICT r9 item 1): the signature is one
-    # numpy matmul per Arrow batch (_signed_buckets) and the per-bucket
-    # candidate scoring is one numpy gram block per bucket — the proven
-    # dedup_embedding_cosine pattern. Replaces the bucket self-join
-    # (TWO corpus scans + 2×corpus interpreted HOF signatures) and the
-    # per-pair interpreted HOF cosine. Bucket sizes stay bounded by the
-    # LSH premise, exactly as the old join's skew bound. Exactness:
-    # integer-quantized vectors make every dot/norm an exact < 2^53
-    # integer, so sim is IEEE-identical to the expression form.
+    # One numpy sign-pack per Arrow batch (_signed_buckets), then one
+    # tiled self-gram per bucket. Replaces the bucket self-join (TWO
+    # corpus scans + 2×corpus interpreted HOF signatures) and the
+    # per-pair interpreted HOF cosine.
     import numpy as np
     import pandas as pd
 
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize(F.col("embedding")).alias("qv")
     )
-    sig = _signed_buckets(emb)
+    sig = _signed_buckets(emb, "qv", _plane_literals(LSH_DIM))
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf["vec_id"].to_numpy())
         ids = pdf["vec_id"].to_numpy()[order]
-        v = np.stack(pdf["qv"].to_numpy()[order])
-        dots = v @ v.T
-        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
-        den = nrm[:, None] * nrm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(den > 0, dots / den, 0.0)
-        iu, ju = np.triu_indices(len(ids), k=1)  # a_id < b_id (sorted)
-        keep = cos[iu, ju] >= 0.25
+        i, j, sim = gram.pairs_at_least(np.stack(pdf["qv"].to_numpy()[order]), 0.25)
         return pd.DataFrame(
-            {
-                "bucket": pdf["bucket"].iloc[0],
-                "a_id": ids[iu[keep]],
-                "b_id": ids[ju[keep]],
-                "sim": cos[iu[keep], ju[keep]],
-            }
+            {"bucket": pdf["bucket"].iloc[0], "a_id": ids[i], "b_id": ids[j], "sim": sim}
         )
 
     return sig.groupBy("bucket").applyInPandas(
@@ -485,14 +421,15 @@ def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", quantize(F.col("embedding")).alias("qv")
     )
     exact = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    # round 10: numpy signatures (see _signed_buckets); the query side's
-    # vec_id filter is applied BEFORE the opaque Arrow pass so the scan
-    # pushdown survives (guide §4 — Spark cannot push filters through
-    # mapInPandas), leaving the corpus-side pass as the only full scan
-    a = _signed_buckets(emb.filter(F.col("vec_id") < N_QUERY)).select(
+    # the query side's vec_id filter is applied BEFORE the opaque Arrow
+    # pass so the scan pushdown survives (guide §4 — Spark cannot push
+    # filters through mapInPandas), leaving the corpus-side pass as the
+    # only full scan
+    planes = _plane_literals(LSH_DIM)
+    a = _signed_buckets(emb.filter(F.col("vec_id") < N_QUERY), "qv", planes).select(
         F.col("vec_id").alias("query_id"), "bucket"
     )
-    b = _signed_buckets(emb).select(
+    b = _signed_buckets(emb, "qv", planes).select(
         F.col("vec_id").alias("neighbor_id"), "bucket"
     )
     cand = (
@@ -671,22 +608,14 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dist = np.einsum("nks,nks->nk", d, d)
                 code = np.argmin(dist, axis=1)  # first min = lowest k
                 adc += lut[:, m, :][:, code]  # (nq, nb) gather
-            out = []
-            for qi in range(len(qids)):
-                mask = ids != qids[qi]
-                nb, dd = ids[mask], adc[qi][mask]
-                sel = np.lexsort((nb, dd))[: min(TOP_K, len(nb))]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": nb[sel],
-                            "adc_dist": dd[sel].astype(np.int64),
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            r, c = gram.topk(adc, ids, TOP_K, desc=False, mask=gram.not_self(qids, ids))
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[r],
+                    "neighbor_id": ids[c],
+                    "adc_dist": adc[r, c].astype(np.int64),
+                }
+            )
 
     part = emb.mapInPandas(
         _score, "query_id long, neighbor_id long, adc_dist long"
@@ -760,41 +689,30 @@ N_PROBE = 4
     tags=("similarity", "embeddings", "approx"),
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2/§8): seeds (vec_id < 16) and queries
-    # (vec_id < 8) are both bounded-by-construction plan-time reads, so
-    # probe lists (4 cells/query) are decided in numpy BEFORE the scan
-    # and the whole index — cell assignment (argmax cosine vs 16 seeds),
-    # probe matching, candidate scoring, per-batch top-5 — runs as ONE
-    # Arrow pass over the corpus. Replaces: a window over 16N rows for
-    # cell assignment (N-partition row_number shuffle!), the probe
-    # window, the lists⋈probes join, and per-pair HOF cosines.
-    # Exactness: integer-quantized cosines everywhere; argmax tie →
-    # lowest cell_id == the old row_number(cell_sim DESC, cell_id)
-    # (np.argmax returns the first maximal index).
+    # Seeds (vec_id < 16) and queries (vec_id < 8) are both
+    # bounded-by-construction plan-time reads, so probe lists (4
+    # cells/query) are decided in numpy BEFORE the scan and the whole
+    # index — cell assignment (argmax cosine vs 16 seeds), probe
+    # matching, candidate scoring, per-batch top-5 — runs as ONE Arrow
+    # pass over the corpus. Replaces a window over 16N rows for cell
+    # assignment, the probe window, the lists⋈probes join, and per-pair
+    # HOF cosines. Argmax tie → lowest cell_id == the oracle's
+    # row_number(cell_sim DESC, cell_id) (np.argmax returns the first
+    # maximal index, and the seeds are sorted by id).
     import numpy as np
     import pandas as pd
 
     sids, S, _ = _query_side(sf_dir, N_CELLS)
     qids, Q, _ = _query_side(sf_dir, N_QUERY)
-    # sort seeds by cell_id so argmax's first-max tiebreak = lowest id
     s_order = np.argsort(sids)
     sids, S = sids[s_order], S[s_order]
+    sn, qn = gram.norms(S), gram.norms(Q)
 
-    def _cos(a, b):  # (na,d) x (nb,d) exact-integer gram cosine
-        dots = a @ b.T
-        an = np.sqrt(np.einsum("ij,ij->i", a, a))
-        bn = np.sqrt(np.einsum("ij,ij->i", b, b))
-        den = an[:, None] * bn[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return np.where(den > 0, dots / den, 0.0)
-
-    # probes[qi] = the N_PROBE cells of query qi by (sim DESC, cell_id)
-    probe_cells: dict[int, np.ndarray] = {}
-    if len(qids) and len(sids):
-        qs = _cos(Q, S)
-        for qi in range(len(qids)):
-            order = np.lexsort((sids, -qs[qi]))[:N_PROBE]
-            probe_cells[qi] = sids[order]
+    # probe[qi, s]: seed s is one of query qi's N_PROBE cells by
+    # (sim DESC, cell_id)
+    probe = np.zeros((len(qids), len(sids)), dtype=bool)
+    r, c = gram.topk(gram.cosine(Q, S, qn, sn), sids, N_PROBE)
+    probe[r, c] = True
 
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize(F.col("embedding")).alias("v")
@@ -802,27 +720,18 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _score(batches):
         for pdf in batches:
-            if len(pdf) == 0 or not probe_cells:
+            if len(pdf) == 0 or not probe.any():
                 continue
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["v"].to_numpy())
-            cell = sids[np.argmax(_cos(v, S), axis=1)]  # first max = min id
-            qcos = _cos(Q, v)
-            out = []
-            for qi, cells in probe_cells.items():
-                mask = np.isin(cell, cells)  # self-match included, as before
-                sel = _topk_within(ids[mask], qcos[qi][mask], TOP_K)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": ids[mask][sel],
-                            "sim": qcos[qi][mask][sel],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            vn = gram.norms(v)
+            cell = np.argmax(gram.cosine(v, S, vn, sn), axis=1)
+            qcos = gram.cosine(Q, v, qn, vn)
+            # self-match included, like the oracle's lists ⋈ probes
+            r, c = gram.topk(qcos, ids, TOP_K, mask=probe[:, cell])
+            yield pd.DataFrame(
+                {"query_id": qids[r], "neighbor_id": ids[c], "sim": qcos[r, c]}
+            )
 
     part = emb.mapInPandas(_score, "query_id long, neighbor_id long, sim double")
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
@@ -967,12 +876,11 @@ NEG_K = 4  # negatives per anchor
     tags=("similarity", "embeddings", "ml", "sampling"),
 )
 def ml_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2): ONE corpus pass emits both candidate kinds
-    # — per-batch top-1 same-label neighbor by exact cosine (kind 0)
-    # and per-batch 4 smallest (md5, id) different-label rows (kind 1)
-    # — replacing TWO broadcast-join corpus scans and two 8N-row window
-    # shuffles with one Arrow pass + windows over ≤ 5 rows/anchor/batch.
-    # Exactness: same integer cosine as sim_topk_bruteforce;
+    # ONE corpus pass emits both candidate kinds — per-batch top-1
+    # same-label neighbor by exact cosine (kind 0) and per-batch 4
+    # smallest (md5, id) different-label rows (kind 1) — replacing TWO
+    # broadcast-join corpus scans and two 8N-row window shuffles with
+    # one Arrow pass + windows over ≤ 5 rows/anchor/batch.
     # hashlib.md5 over f"{anchor}-{cand}" equals Spark's
     # md5(concat_ws('-', ...)) (lowercase hex, long→string digits), and
     # hex-string ordering is byte-lexicographic in both engines. The
@@ -984,70 +892,44 @@ def ml_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     qids, Q, qlabels = _query_side(sf_dir, N_QUERY, with_label=True)
-    anchors = [
-        (int(qids[i]), Q[i], qlabels[i])
-        for i in range(len(qids))
-        if qlabels[i] is not None
-    ]
+    keep = np.array([lab is not None for lab in qlabels], dtype=bool)
+    aids, A = qids[keep], Q[keep]
+    alabs = np.array([lab for lab in qlabels if lab is not None])
+    an = gram.norms(A)
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", quantize(F.col("embedding")).alias("qv")
     )
 
     def _cand(batches):
         for pdf in batches:
-            if len(pdf) == 0 or not anchors:
+            if len(pdf) == 0 or not len(aids):
                 continue
             ids = pdf["vec_id"].to_numpy()
             labels = pdf["label"].to_numpy()
-            lab_ok = pdf["label"].notna().to_numpy()
+            lab_ok = pdf["label"].notna().to_numpy()[None, :]
+            same = labels[None, :] == alabs[:, None]
             v = np.stack(pdf["qv"].to_numpy())
-            vn = np.sqrt(np.einsum("ij,ij->i", v, v))
-            out = []
-            for aid, aq, alab in anchors:
-                an = np.sqrt(aq @ aq)
-                # positives: same label, not self — batch top-1
-                pmask = lab_ok & (labels == alab) & (ids != aid)
-                if pmask.any():
-                    den = an * vn[pmask]
-                    dots = v[pmask] @ aq
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = np.where(den > 0, dots / den, 0.0)
-                    sel = _topk_within(ids[pmask], cos, 1)
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "kind": 0,
-                                "anchor_id": aid,
-                                "cand_id": ids[pmask][sel],
-                                "sim": cos[sel],
-                                "h": "",
-                            }
-                        )
-                    )
-                # negatives: different label — batch 4 smallest (h, id)
-                nmask = lab_ok & (labels != alab)
-                if nmask.any():
-                    nids = ids[nmask]
-                    hs = np.array(
-                        [
-                            hashlib.md5(f"{aid}-{c}".encode()).hexdigest()
-                            for c in nids
-                        ]
-                    )
-                    sel = np.lexsort((nids, hs))[:NEG_K]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "kind": 1,
-                                "anchor_id": aid,
-                                "cand_id": nids[sel],
-                                "sim": 0.0,
-                                "h": hs[sel],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            # positives: same label, not self — batch top-1
+            cos = gram.cosine(A, v, an, gram.norms(v))
+            pr, pc = gram.topk(cos, ids, 1, mask=lab_ok & same & gram.not_self(aids, ids))
+            # negatives: different label — batch 4 smallest (h, id)
+            nmask = lab_ok & ~same
+            hs = np.full(nmask.shape, "", dtype="<U32")
+            ha, hc = np.nonzero(nmask)
+            hs[ha, hc] = [
+                hashlib.md5(f"{aids[a]}-{ids[c]}".encode()).hexdigest()
+                for a, c in zip(ha, hc)
+            ]
+            nr, nc = gram.topk(hs, ids, NEG_K, desc=False, mask=nmask)
+            yield pd.DataFrame(
+                {
+                    "kind": np.repeat([0, 1], [len(pr), len(nr)]),
+                    "anchor_id": aids[np.concatenate([pr, nr])],
+                    "cand_id": ids[np.concatenate([pc, nc])],
+                    "sim": np.concatenate([cos[pr, pc], np.zeros(len(nr))]),
+                    "h": np.concatenate([np.full(len(pr), "", "<U32"), hs[nr, nc]]),
+                }
+            )
 
     # cached: both branches below read it — without the (tiny,
     # ≤ 5 rows/anchor/batch) cache the corpus pass would run twice
@@ -1204,18 +1086,19 @@ _KNN_ACC_S = 10**6
     tags=("similarity", "mllib", "embeddings"),
 )
 def ml_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2): same one-pass Arrow kernel as
-    # sim_topk_bruteforce, with the 50-row eval fold (bounded by
-    # construction) as the plan-time query matrix — replaces the
-    # broadcast-nested-loop's 50N interpreted HOF cosines and the
-    # 50N-row window shuffle with per-batch numpy grams + a window over
-    # ≤ 150 rows/batch. Exactness: quantized integer vectors, identical
-    # IEEE cosine tree (see sim_topk_bruteforce).
+    # Same one-pass Arrow kernel as sim_topk_bruteforce, with the
+    # 50-row eval fold (bounded by construction) as the plan-time query
+    # matrix — replaces the broadcast-nested-loop's 50N interpreted HOF
+    # cosines and the 50N-row window shuffle with per-batch numpy grams
+    # + a window over ≤ 150 rows/batch. NULL labels stay NULL through
+    # the kernel; the vote and the accuracy below order and count them
+    # like the oracle.
     import numpy as np
     import pandas as pd
 
     qids, Q, qlabels = _query_side(sf_dir, _KNN_EVAL, with_label=True)
-    qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+    qn = gram.norms(Q)
+    qlabels = pd.array(qlabels, dtype="Int64")
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", quantize(F.col("embedding")).alias("qv")
     )
@@ -1226,28 +1109,17 @@ def ml_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["qv"].to_numpy())
-            dots = Q @ v.T
-            vn = np.sqrt(np.einsum("ij,ij->i", v, v))
-            den = qn[:, None] * vn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den > 0, dots / den, 0.0)
-            out = []
-            for qi in range(len(qids)):
-                mask = ids != qids[qi]
-                sel = _topk_within(ids[mask], cos[qi][mask], _KNN_K)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "true_label": qlabels[qi],
-                            "nb_id": ids[mask][sel],
-                            "nb_label": pdf["label"].to_numpy()[mask][sel],
-                            "sim": cos[qi][mask][sel],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            cos = gram.cosine(Q, v, qn, gram.norms(v))
+            r, c = gram.topk(cos, ids, _KNN_K, mask=gram.not_self(qids, ids))
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[r],
+                    "true_label": qlabels[r],
+                    "nb_id": ids[c],
+                    "nb_label": pdf["label"].to_numpy()[c],
+                    "sim": cos[r, c],
+                }
+            )
 
     part = emb.mapInPandas(
         _score,
@@ -1263,21 +1135,22 @@ def ml_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes = topk.groupBy("query_id", "true_label", "nb_label").agg(
         F.count(F.lit(1)).alias("c")
     )
+    # nb_label NULLS LAST and a NULL comparison counting 0: DuckDB's
+    # default order and the oracle's CASE
     vw = Window.partitionBy("query_id").orderBy(
-        F.col("c").desc(), F.col("nb_label")
+        F.col("c").desc(), F.col("nb_label").asc_nulls_last()
     )
     pred = (
         votes.withColumn("vr", F.row_number().over(vw))
         .filter(F.col("vr") == 1)
         .select("query_id", "true_label", F.col("nb_label").alias("pred_label"))
     )
+    correct = F.when(F.col("pred_label") == F.col("true_label"), 1).otherwise(0)
     return (
         pred.groupBy(F.col("true_label").alias("label"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_eval"),
-            F.sum((F.col("pred_label") == F.col("true_label")).cast("long"))
-            .cast("long")
-            .alias("n_correct"),
+            F.sum(correct).cast("long").alias("n_correct"),
         )
         .select(
             "label",
@@ -1331,17 +1204,17 @@ _RANGE_TAU_NUM = 15  # tau = 0.15 as a ratio (x100)
     tags=("similarity", "embeddings"),
 )
 def sim_range_search_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2): one Arrow pass, per-batch numpy gram vs the
-    # bounded plan-time query matrix; the threshold is applied inside
-    # the kernel so only qualifying pairs leave the batch — replaces
-    # the broadcast-nested-loop's 8N interpreted HOF cosines. Pure
-    # filter semantics: no window at all. Same exact-integer cosine as
-    # sim_topk_bruteforce; the 0.15 literal is the identical double.
+    # One Arrow pass, per-batch numpy gram vs the bounded plan-time
+    # query matrix; the threshold is applied inside the kernel so only
+    # qualifying pairs leave the batch — replaces the
+    # broadcast-nested-loop's 8N interpreted HOF cosines. Pure filter
+    # semantics: no window at all. The 0.15 literal is the identical
+    # double on both engines.
     import numpy as np
     import pandas as pd
 
     qids, Q, _ = _query_side(sf_dir, N_QUERY)
-    qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+    qn = gram.norms(Q)
     tau = _RANGE_TAU_NUM / 100.0
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize(F.col("embedding")).alias("qv")
@@ -1353,25 +1226,11 @@ def sim_range_search_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["qv"].to_numpy())
-            dots = Q @ v.T
-            vn = np.sqrt(np.einsum("ij,ij->i", v, v))
-            den = qn[:, None] * vn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den > 0, dots / den, 0.0)
-            out = []
-            for qi in range(len(qids)):
-                keep = (cos[qi] >= tau) & (ids != qids[qi])
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": ids[keep],
-                            "sim": cos[qi][keep],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            cos = gram.cosine(Q, v, qn, gram.norms(v))
+            r, c = np.nonzero((cos >= tau) & gram.not_self(qids, ids))
+            yield pd.DataFrame(
+                {"query_id": qids[r], "neighbor_id": ids[c], "sim": cos[r, c]}
+            )
 
     return (
         emb.mapInPandas(_score, "query_id long, neighbor_id long, sim double")
@@ -1554,12 +1413,11 @@ _MRL_K = 10
     tags=("similarity", "embeddings", "eval"),
 )
 def sim_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2): one Arrow pass computes all four prefix
-    # grams per batch (numpy matmuls over V[:, :pd]) and emits only
-    # per-(query, prefix) batch top-10 — replaces the ×4 explode of the
-    # broadcast-nested-loop join (32N rows of sliced HOF cosines) and
-    # its 32N-row window. Same exact-integer cosine argument; prefix
-    # slices of exact integers stay exact.
+    # One Arrow pass computes all four prefix grams per batch (numpy
+    # matmuls over V[:, :pd]; prefix slices of exact integers stay
+    # exact) and emits only per-(query, prefix) batch top-10 — replaces
+    # the ×4 explode of the broadcast-nested-loop join (32N rows of
+    # sliced HOF cosines) and its 32N-row window.
     import numpy as np
     import pandas as pd
 
@@ -1574,30 +1432,17 @@ def sim_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["qv"].to_numpy())
-            out = []
+            mask = gram.not_self(qids, ids)
+            cols = {"query_id": [], "pd": [], "neighbor_id": [], "sim": []}
             for d in _MRL_DIMS:
                 qp, vp = Q[:, :d], v[:, :d]
-                dots = qp @ vp.T
-                qn = np.sqrt(np.einsum("ij,ij->i", qp, qp))
-                vn = np.sqrt(np.einsum("ij,ij->i", vp, vp))
-                den = qn[:, None] * vn[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(den > 0, dots / den, 0.0)
-                for qi in range(len(qids)):
-                    mask = ids != qids[qi]
-                    sel = _topk_within(ids[mask], cos[qi][mask], _MRL_K)
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": qids[qi],
-                                "pd": d,
-                                "neighbor_id": ids[mask][sel],
-                                "sim": cos[qi][mask][sel],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+                cos = gram.cosine(qp, vp, gram.norms(qp), gram.norms(vp))
+                r, c = gram.topk(cos, ids, _MRL_K, mask=mask)
+                cols["query_id"].append(qids[r])
+                cols["pd"].append(np.full(len(r), d))
+                cols["neighbor_id"].append(ids[c])
+                cols["sim"].append(cos[r, c])
+            yield pd.DataFrame({k: np.concatenate(v) for k, v in cols.items()})
 
     part = emb.mapInPandas(
         _score, "query_id long, pd int, neighbor_id long, sim double"
@@ -1690,24 +1535,25 @@ _MAXSIM_K = 3
         "partial order varies), every cos is a quotient of exact "
         "integer dot products (quantized chunks, sums < 2^53), and the "
         "final round(. , 9) grid is ~1e7 ulps wide — hash-exact. "
-        "At 100 TB the same plan holds: chunking is a map-side "
-        "transform, blocking bounds candidates, the heavy join is one "
-        "hash shuffle on (label)."
+        "At 100 TB the same plan holds: blocking bounds candidates, "
+        "the label block is one hash shuffle, and a block of m vectors "
+        "costs O(m·dim) group input plus a (4·4) × (4·m) token-cosine "
+        "gram (operators/gram.py)."
     ),
     tags=("similarity", "embeddings", "multivector"),
 )
 def sim_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2): one numpy MaxSim kernel per LABEL block —
-    # the blocking key already bounds candidates, so the token explode
-    # (×4 rows), the broadcast token join, and BOTH keyed aggregates
-    # collapse into a single applyInPandas over (label) groups that
-    # computes every query-token × candidate-token cosine as one einsum.
-    # Equivalence: quantized chunks make each token dot an exact < 2^53
-    # integer (numpy order-independent); the per-(query,cand,qt) max and
+    # One numpy MaxSim kernel per LABEL block — the blocking key already
+    # bounds candidates, so the token explode (×4 rows), the broadcast
+    # token join, and BOTH keyed aggregates collapse into a single
+    # applyInPandas over (label) groups. Every query-token ×
+    # candidate-token cosine is one 2-D gram over the block's reshaped
+    # tokens: (4·nq) × (4·m) with nq ≤ _MAXSIM_NQ, so O(m) per block on
+    # top of the O(m·dim) group input. The per-(query, cand, qt) max and
     # the FIXED qt-order 4-term sum are reproduced exactly (left-assoc
     # adds); the final round(.,9) stays a SPARK expression on the raw
-    # sum, so the rounding semantics are untouched. NULL labels are
-    # filtered exactly as the old equi-join dropped them.
+    # sum. NULL labels are filtered exactly as the oracle's equi-join
+    # drops them.
     import numpy as np
     import pandas as pd
 
@@ -1721,28 +1567,16 @@ def sim_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        v = np.stack(pdf["qv"].to_numpy()[order])
-        t = v.reshape(len(ids), 4, _MAXSIM_CHUNK)
-        tn = np.sqrt(np.einsum("nak,nak->na", t, t))
-        empty = np.array([], dtype=np.int64)
-        out_q, out_c, out_s = [empty], [empty], [np.array([], dtype=np.float64)]
-        for qi in np.where(ids < _MAXSIM_NQ)[0]:
-            dots = np.einsum("ak,nbk->nab", t[qi], t)
-            den = tn[qi][None, :, None] * tn[:, None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den > 0, dots / den, 0.0)
-            ms = cos.max(axis=2)  # per query-token max over cand tokens
-            tot = ((ms[:, 0] + ms[:, 1]) + ms[:, 2]) + ms[:, 3]
-            mask = ids != ids[qi]
-            out_q.append(np.full(mask.sum(), ids[qi], dtype=np.int64))
-            out_c.append(ids[mask])
-            out_s.append(tot[mask])
+        tok = np.stack(pdf["qv"].to_numpy()[order]).reshape(-1, _MAXSIM_CHUNK)
+        tn = gram.norms(tok)
+        q = np.flatnonzero(ids < _MAXSIM_NQ)
+        qtok = (q[:, None] * 4 + np.arange(4)).ravel()  # the queries' token rows
+        cos = gram.cosine(tok[qtok], tok, tn[qtok], tn)
+        ms = cos.reshape(len(q), 4, len(ids), 4).max(axis=3)  # max over cand tokens
+        tot = ((ms[:, 0] + ms[:, 1]) + ms[:, 2]) + ms[:, 3]
+        r, c = np.nonzero(gram.not_self(ids[q], ids))
         return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "cand_id": np.concatenate(out_c),
-                "maxsim_raw": np.concatenate(out_s),
-            }
+            {"query_id": ids[q][r], "cand_id": ids[c], "maxsim_raw": tot[r, c]}
         )
 
     scored = emb.groupBy("label").applyInPandas(
@@ -1948,12 +1782,12 @@ def _sql_signword(v: str, lo: int) -> str:
     tags=("similarity", "embeddings", "binary"),
 )
 def vector_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2): sketch + score + per-batch top-k in one
-    # Arrow pass — the old plan's per-row transform/aggregate sign fold
-    # (64 interpreted lambda steps/row), broadcast-nested-loop join,
-    # and 8N-row window become one numpy sign-pack, an XOR + byte-LUT
-    # popcount, and a window over ≤ 40 rows/batch. Pure integer/compare
-    # arithmetic — trivially exact.
+    # Sketch + score + per-batch top-k in one Arrow pass — the old
+    # plan's per-row transform/aggregate sign fold (64 interpreted
+    # lambda steps/row), broadcast-nested-loop join, and 8N-row window
+    # become one numpy sign-pack, an XOR + byte-LUT popcount, and a
+    # window over ≤ 40 rows/batch. Pure integer/compare arithmetic —
+    # trivially exact.
     import numpy as np
     import pandas as pd
 
@@ -1968,24 +1802,11 @@ def vector_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            w0, w1 = _sign_words(v)
-            out = []
-            for qi in range(len(qids)):
-                ham = _popcount64(w0 ^ q0[qi]) + _popcount64(w1 ^ q1[qi])
-                mask = ids != qids[qi]
-                nb, hh = ids[mask], ham[mask]
-                sel = np.lexsort((nb, hh))[: min(_HAM_K, len(nb))]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "cand_id": nb[sel],
-                            "hamming": hh[sel],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            ham = _hamming(q0, q1, *_sign_words(v))
+            r, c = gram.topk(ham, ids, _HAM_K, desc=False, mask=gram.not_self(qids, ids))
+            yield pd.DataFrame(
+                {"query_id": qids[r], "cand_id": ids[c], "hamming": ham[r, c]}
+            )
 
     part = emb.mapInPandas(
         _score, "query_id long, cand_id long, hamming long"
@@ -2065,18 +1886,18 @@ _RET_K = 5
     tags=("similarity", "embeddings", "pipeline"),
 )
 def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 10 (guide §4.2): both retrieval stages run inside ONE Arrow
-    # pass per batch — numpy sign-pack + XOR/LUT-popcount Hamming, a
-    # per-batch 32-candidate shortlist per query, and the exact cosine
-    # computed for shortlisted rows only. The global shortlist window
+    # Both retrieval stages run inside ONE Arrow pass per batch — numpy
+    # sign-pack + XOR/LUT-popcount Hamming, a per-batch 32-candidate
+    # shortlist per query, and the exact cosine of the shortlisted rows
+    # (gathered from the nq × batch gram). The global shortlist window
     # then sees ≤ 32 rows/query/batch instead of all 4N sketch pairs,
-    # and the rerank stays a Spark window + round(.,9) expression.
-    # Exactness: the corpus qv is quantized IN the kernel with the
-    # exact half-up identity round(t) = sign(t)·floor(|t|+0.5) (|t|+0.5
-    # is exactly representable for |t| < 2^52, and ties x.5 are exact
-    # doubles), so it equals F.round/`quantize` bit for bit; cosine is
-    # the usual exact-integer gram; prk/rk windows keep their original
-    # orderings over a provable superset of the true shortlist.
+    # and the rerank stays a Spark window + round(.,9) expression. The
+    # corpus qv is quantized IN the kernel with the exact half-up
+    # identity round(t) = sign(t)·floor(|t|+0.5) (|t|+0.5 is exactly
+    # representable for |t| < 2^52, and ties x.5 are exact doubles), so
+    # it equals F.round/`quantize` bit for bit; prk/rk windows keep
+    # their original orderings over a provable superset of the true
+    # shortlist.
     import numpy as np
     import pandas as pd
 
@@ -2085,7 +1906,7 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         q0, q1 = _sign_words(R)
         t = R * 1000.0
         Q = np.sign(t) * np.floor(np.abs(t) + 0.5)
-        qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+        qn = gram.norms(Q)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def _score(batches):
@@ -2094,32 +1915,21 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            w0, w1 = _sign_words(v)
+            ham = _hamming(q0, q1, *_sign_words(v))
+            r, c = gram.topk(
+                ham, ids, _RET_SHORTLIST, desc=False, mask=gram.not_self(qids, ids)
+            )
             tt = v * 1000.0
             qv = np.sign(tt) * np.floor(np.abs(tt) + 0.5)
-            vn = np.sqrt(np.einsum("ij,ij->i", qv, qv))
-            out = []
-            for qi in range(len(qids)):
-                ham = _popcount64(w0 ^ q0[qi]) + _popcount64(w1 ^ q1[qi])
-                mask = ids != qids[qi]
-                nb, hh = ids[mask], ham[mask]
-                sel = np.lexsort((nb, hh))[: min(_RET_SHORTLIST, len(nb))]
-                dots = qv[mask][sel] @ Q[qi]
-                den = qn[qi] * vn[mask][sel]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(den > 0, dots / den, 0.0)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "cand_id": nb[sel],
-                            "hamming": hh[sel],
-                            "sim_raw": cos,
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            cos = gram.cosine(Q, qv, qn, gram.norms(qv))
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[r],
+                    "cand_id": ids[c],
+                    "hamming": ham[r, c],
+                    "sim_raw": cos[r, c],
+                }
+            )
 
     part = emb.mapInPandas(
         _score, "query_id long, cand_id long, hamming long, sim_raw double"

@@ -462,11 +462,10 @@ def st_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFr
     GROUP BY user_id
     """,
     doc=(
-        "Spark 4 transformWithStateInPandas (typed ValueState, RocksDB "
-        "provider) running per-user (count, max) under availableNow "
-        "(import-gated: the TWS worker needs google.protobuf, absent in "
-        "this container, so an applyInPandasWithState fallback computes "
-        "IDENTICAL state semantics until it exists); "
+        "Arbitrary stateful streaming: applyInPandasWithState keeps a "
+        "per-user (count, max) state record under availableNow (the "
+        "Spark 4 transformWithStateInPandas form needs google.protobuf, "
+        "which the engine does not depend on); "
         "the wrapped emissions reduce to the final state, and because "
         "count/max are order-independent the result is HASH-checkable "
         "against the plain batch aggregate — a real-streaming-execution "

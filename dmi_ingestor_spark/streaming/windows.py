@@ -505,119 +505,45 @@ def foreachbatch_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def transform_with_state_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running (count, max) via ``transformWithStateInPandas`` —
-    the Spark 4 arbitrary-stateful-processing API (successor to
-    ``applyInPandasWithState``): typed state handles (ValueState /
-    ListState / MapState), timers, and TTL live in the operator, not in
-    hand-rolled tuples.
+    """Per-user running (count, max) via ``applyInPandasWithState``.
 
-    State design: one ValueState row (n, mx) per user key. Both
-    statistics are ORDER-INDEPENDENT (count and max commute with any
-    micro-batch split), so the final emission per key is exactly the
-    batch aggregate no matter how availableNow slices the input — which
-    is what makes the wrapping query hash-checkable against a plain SQL
+    State design: one (n, mx) state row per user key. Both statistics
+    are ORDER-INDEPENDENT (count and max commute with any micro-batch
+    split), so the final emission per key is exactly the batch
+    aggregate no matter how availableNow slices the input — which is
+    what makes the wrapping query hash-checkable against a plain SQL
     oracle rather than rows-only.
 
     Scale: state is O(distinct users), hash-partitioned across state
-    stores; transformWithState requires the RocksDB provider (set here
-    and restored), whose changelog checkpointing is the 100 TB story —
-    state larger than executor memory spills to local SST files.
-
-    Sandbox gate: the transformWithState Python worker speaks a
-    protobuf state protocol (`pyspark.sql.streaming.proto`), and
-    `google.protobuf` is not installed in this container (re-verified
-    round 10, 2026-08-18: `import google.protobuf`
-    still raises ModuleNotFoundError). When the
-    import fails we fall back to `applyInPandasWithState` with the
-    IDENTICAL state semantics (same (n, mx) record, same emissions), so
-    the query stays hash-green either way and flips to the new API the
-    moment protobuf exists. The gate is import-tested, not env-flagged.
+    stores. Spark 4's ``transformWithStateInPandas`` would hold the same
+    record in a typed ValueState, but its Python worker needs
+    ``google.protobuf``, which this engine does not depend on.
     """
     import pandas as pd
 
-    try:  # pragma: no cover - depends on container contents
-        from google.protobuf import descriptor  # noqa: F401
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-        _HAVE_PROTOBUF = True
-    except ImportError:
-        _HAVE_PROTOBUF = False
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", "n long, mx double")
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            if self._state.exists():
-                n, mx = self._state.get()
-            else:
-                n, mx = 0, float("-inf")
-            for pdf in rows:
-                n += len(pdf)
-                m = pdf["value"].max()
-                if m == m:  # not-NaN guard; fixture values are non-null
-                    mx = m if m > mx else mx
-            self._state.update((n, float(mx)))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_value": [mx]}
-            )
-
-        def close(self) -> None:
-            pass
+    def update(key, pdfs, state: GroupState):
+        n, mx = state.get if state.exists else (0, float("-inf"))
+        for pdf in pdfs:
+            n += len(pdf)
+            m = pdf["value"].max()
+            if m == m:  # not-NaN guard; fixture values are non-null
+                mx = m if m > mx else mx
+        state.update((n, float(mx)))
+        yield pd.DataFrame(
+            {"user_id": [key[0]], "n_events": [n], "max_value": [mx]}
+        )
 
     events = read_events_stream(spark, sf_dir)
-    grouped = events.select("user_id", "value").groupBy("user_id")
-    out_schema = "user_id long, n_events long, max_value double"
-
-    if _HAVE_PROTOBUF:
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            out = grouped.transformWithStateInPandas(
-                UserStats(),
-                outputStructType=out_schema,
-                outputMode="Update",
-                timeMode="None",
-            )
-            emitted = run_available_now(out, "st_tws_sink", "update")
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-    else:
-        from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-        def update(key, pdfs, state: GroupState):
-            n, mx = state.get if state.exists else (0, float("-inf"))
-            for pdf in pdfs:
-                n += len(pdf)
-                m = pdf["value"].max()
-                if m == m:
-                    mx = m if m > mx else mx
-            state.update((n, float(mx)))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_value": [mx]}
-            )
-
-        out = grouped.applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="n long, mx double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        emitted = run_available_now(out, "st_tws_sink", "update")
+    out = events.select("user_id", "value").groupBy("user_id").applyInPandasWithState(
+        update,
+        outputStructType="user_id long, n_events long, max_value double",
+        stateStructType="n long, mx double",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    emitted = run_available_now(out, "st_tws_sink", "update")
     # Cumulative emissions are monotone per key: MAX over them = final
     # state = the global aggregate.
     return emitted.groupBy("user_id").agg(

@@ -396,3 +396,39 @@ def test_dbscan_lsh_oracle_quantizes_like_the_builder(spark, tmp_path):
         want = con.execute(spec.oracle).fetchdf()
     assert got["eps_ball_count"].tolist() == [1, 2, 2]
     assert not compare(spec.name, normalize(got), normalize(want))
+
+
+def test_knn_classifier_eval_matches_oracle_with_null_labels(spark, tmp_path):
+    """Every 7th label NULL, as a weakly labeled corpus has. The vote
+    tiebreak must order a NULL neighbour label last (DuckDB's default)
+    and the NULL class must count 0 correct (the oracle's CASE), not
+    NULL."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.oracle_check import compare, normalize
+
+    rng = np.random.default_rng(11)
+    n = 200
+    table = pa.table(
+        {
+            "vec_id": pa.array(range(n), pa.int64()),
+            "embedding": pa.array(
+                list(rng.normal(0.0, 0.1, (n, 64)).astype(np.float32)),
+                pa.list_(pa.float32()),
+            ),
+            "label": pa.array(
+                [None if i % 7 == 0 else i % 3 for i in range(n)], pa.int32()
+            ),
+        }
+    )
+    pq.write_table(table, str(tmp_path / "embeddings.parquet"))
+    spec = REGISTRY["ml_knn_classifier_eval"]
+    got = spec.builder(spark, str(tmp_path)).toPandas()
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
+        want = con.execute(spec.oracle).fetchdf()
+    assert got["label"].isna().sum() == 1
+    assert not compare(spec.name, normalize(got), normalize(want))

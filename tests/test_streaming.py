@@ -253,8 +253,8 @@ def test_stream_stream_full_outer_join_matches_batch(spark, sf_dir):
 
 
 def test_transform_with_state_matches_batch(spark, sf_dir):
-    """The TWS/fallback per-user (count, max) equals the batch aggregate
-    regardless of which state API the protobuf import-gate selected."""
+    """The applyInPandasWithState per-user (count, max) equals the batch
+    aggregate."""
     from pyspark.sql import functions as F
 
     from dmi_ingestor_spark.streaming.windows import transform_with_state_user_stats
